@@ -37,7 +37,8 @@ contaminated rows can be replaced one by one until every row is clean —
 Accepted tokens: any metric name (``inv_dfield``, ``binning_4d``,
 ``q_asof_ops``, ...), the phase aliases ``synthetic`` (all four phase-2
 metrics), ``suite`` (every registered query), and ``duck`` (the DuckDB
-baseline sweep).
+baseline sweep). A splice is refused unless the record's ``sf``,
+``synthetic_rows`` and ``cpus`` all match this run's.
 
 Output: {"metric": "suite_total", "value": <sec>, "unit": "sec",
          "queries": {...}, "canary_ok": bool, "sf": <sf>}
@@ -184,6 +185,13 @@ def main() -> None:
                 f"sf={base.get('sf')}/n={base.get('synthetic_rows')} but "
                 f"this run is sf={sf}/n={n_synth} — splicing across scales "
                 "would fabricate a record; run the full bench instead",
+            )
+        if base.get("cpus") != int(cpus):
+            raise SystemExit(
+                "bench: prior BENCH_full.json was recorded at "
+                f"cpus={base.get('cpus')} but this run has cpus={cpus} — "
+                "splicing across core counts would fabricate a record; "
+                "run the full bench instead",
             )
 
     def _want(name: str) -> bool:
@@ -778,6 +786,7 @@ def main() -> None:
                 "duck": duck_timings,
                 "sf": sf,
                 "synthetic_rows": n_synth,
+                "cpus": int(cpus),
                 "phase_order": "inv_dfield -> synthetic (own session) -> "
                                "suite -> duckdb",
                 "spliced_only": sorted(selected) if selected else [],

@@ -23,25 +23,28 @@ goes through BigDecimal and costs ~10x the rest of the expression combined.
 Explicit (non-uniform) edges use left-closed bins with the last edge
 inclusive (src/sed/binning/numba_bin.py:72-102).
 
-Physical strategy (``bin_dataframe``) is chosen by output-cube size:
+The dense histogram (``bin_dataframe``) has one physical path per
+output-cube size, chosen from the cube size alone:
 
-* default (cube ≤ ``CHUNKED_MIN_CUBE`` cells): flat bin index →
+* cube ≤ ``CHUNKED_MIN_CUBE`` cells — *groupby*: flat bin index →
   ``groupBy.count()`` → sparse Arrow collect → driver scatter. The whole
-  reduction is JVM-side (whole-stage codegen + Tungsten hash/sort
-  aggregate); ``toArrow`` encodes result partitions to Arrow IPC **in
-  parallel on the executors**, so the driver only concatenates buffers and
-  does one vectorized ``dense[idx] = cnt``. Measured on 1e8 rows → 100⁴
-  cells this is ~2.5× faster than any path that streams raw rows into
-  Python: the JVM→Python Arrow feed alone costs more than the entire
-  aggregation (~15 s vs ~9 s total at local[32]).
-* huge cube (> ``CHUNKED_MIN_CUBE``): the sparse collect can exceed the
-  dense array's own size (occupancy × 12 B vs cube × 4 B), so each task
-  sort-deduplicates its flat indices with ``np.unique``, packs sparse
-  (idx, count) pairs into per-chunk blobs, and a second stage keyed on
-  chunk id reduces them to dense sub-arrays — the driver collect is then
-  exactly cube-sized regardless of occupancy. This pays the Python Arrow
-  feed, which is why it is reserved for cubes where the sparse collect
-  would not fit.
+  reduction is JVM-side (whole-stage codegen + Tungsten hash aggregate);
+  ``toArrow`` encodes result partitions to Arrow IPC **in parallel on the
+  executors**, so the driver only concatenates buffers and does one
+  vectorized ``dense[idx] = cnt``. Measured on 1e8 rows → 100⁴ cells this
+  is ~2.5× faster than any path that streams raw rows into Python: the
+  JVM→Python Arrow feed alone costs more than the entire aggregation
+  (~15 s vs ~9 s total at local[32]). Cubes above
+  ``GROUPBY_CELLS_PER_REDUCER`` × the shuffle width repartition by
+  contiguous index blocks (see :func:`_groupby_sparse_agg`).
+* cube > ``CHUNKED_MIN_CUBE`` cells — *chunked*: the sparse collect can
+  exceed the dense array's own size (occupancy × 12 B vs cube × 4 B), so
+  each task sort-deduplicates its flat indices with ``np.unique``, packs
+  sparse (idx, count) pairs into per-chunk blobs, and a second stage keyed
+  on chunk id reduces them to dense sub-arrays — the driver collect is
+  then exactly cube-sized regardless of occupancy. This pays the Python
+  Arrow feed, which is why it is reserved for cubes where the sparse
+  collect would not fit.
 """
 
 from __future__ import annotations
@@ -105,40 +108,14 @@ class BinnedData:
 # bin-index expressions
 # ---------------------------------------------------------------------------
 
-def bin_index_expr(axis: BinAxis, col: Column | None = None) -> tuple[Column, Column]:
-    """Return ``(bin_index, is_valid)`` Columns for one axis.
+def bin_index_expr(axis: BinAxis, col: Column | None = None) -> Column:
+    """Nullable bin index for one axis: null where the value is NaN, null
+    or out of range, so validity is ``bin_index_expr(...).isNotNull()``.
 
-    Uniform path is a pure JVM expression replicating the reference kernel's
-    rounding (numba_bin.py:53-61). Non-uniform explicit edges use a
-    left-closed binary-search equivalent built from ``width_bucket`` over the
-    edge array via an aggregate expression (still JVM-side).
-    """
-    c = (col if col is not None else F.col(axis.name)).cast("double")
-    if axis.uniform:
-        delta = 1.0 / ((axis.hi - axis.lo) / axis.nbins)
-        j = (c - F.lit(axis.lo)) * F.lit(delta) + F.lit(5e-12)
-        # reference validity is round(j,11) in [0, nbins]; with j already
-        # shifted by +5e-12 that is j in [0, nbins + 1e-11]
-        valid = c.isNotNull() & (j >= 0) & (j <= axis.nbins + 1e-11)
-        idx = F.least(F.floor(j), F.lit(axis.nbins - 1)).cast(IntegerType())
-        return idx, valid
-    # explicit edges: j such that edges[j] <= x < edges[j+1]; x == last edge
-    # maps to the last bin. aggregate(edges, 0, acc + (x >= e)) counts edges
-    # <= x — JVM-side, O(n_edges) but n_edges is small for explicit-edge use.
-    edges = axis.edges
-    arr = F.array(*[F.lit(float(e)) for e in edges[1:-1]])
-    # count of interior edges <= x gives the left-closed bin index
-    idx = F.aggregate(
-        arr,
-        F.lit(0),
-        lambda acc, e: acc + F.when(c >= e, 1).otherwise(0),
-    ).cast(IntegerType())
-    valid = c.isNotNull() & (c >= float(edges[0])) & (c <= float(edges[-1]))
-    return idx, valid
-
-
-def bin_index_nullable(axis: BinAxis, col: Column | None = None) -> Column:
-    """Nullable bin index: null where the value is NaN/null/out-of-range.
+    The uniform path replicates the reference kernel's rounding
+    (numba_bin.py:53-61). Non-uniform explicit edges count the interior
+    edges ``<= x`` with an aggregate expression (left-closed bins, last
+    edge inclusive, still JVM-side).
 
     Folding validity INTO the index expression (instead of a separate
     ``filter``) is what keeps the physical plan evaluating each axis source
@@ -155,9 +132,11 @@ def bin_index_nullable(axis: BinAxis, col: Column | None = None) -> Column:
     if axis.uniform:
         delta = 1.0 / ((axis.hi - axis.lo) / axis.nbins)
         j = (c - F.lit(axis.lo)) * F.lit(delta) + F.lit(5e-12)
-        # null c -> null j -> null condition -> null result (dropped later);
-        # NaN compares greater than any double in Spark, so NaN j fails the
-        # upper bound — same exclusion as the reference kernel
+        # reference validity is round(j,11) in [0, nbins]; with j already
+        # shifted by +5e-12 that is j in [0, nbins + 1e-11]. Null c -> null
+        # j -> null condition -> null result; NaN compares greater than any
+        # double in Spark, so NaN j fails the upper bound — same exclusion
+        # as the reference kernel
         return F.when(
             (j >= 0) & (j <= axis.nbins + 1e-11),
             F.least(F.floor(j), F.lit(axis.nbins - 1)),
@@ -190,7 +169,7 @@ def _axis_source_projection(
     producer (e.g. the dfield broadcast-join blend feeding kx/ky) into the
     multi-reference consumer, while cheap plain-column sources still
     collapse to a single Project. The companion half of the fix is
-    :func:`bin_index_nullable` — no pre-aggregation filter exists for
+    :func:`bin_index_expr` — no pre-aggregation filter exists for
     predicate pushdown to duplicate expressions into.
     """
     sels: list[Column] = [F.col(c) for c in keep_cols]
@@ -249,11 +228,11 @@ def _bin_columns(
     names: list[str] = []
     for ax, sname in zip(axes, snames):
         bname = f"__bin_{ax.name}"
-        cols[bname] = bin_index_nullable(ax, F.col(sname))
+        cols[bname] = bin_index_expr(ax, F.col(sname))
         names.append(bname)
     # validity is folded into the nullable indices; the single isNotNull
     # conjunct per axis references each axis tree once (vs 3x for a range
-    # filter) — see bin_index_nullable
+    # filter) — see bin_index_expr
     out = srcdf.withColumns(cols).drop(*snames)
     cond = None
     for b in names:
@@ -293,8 +272,7 @@ CHUNKED_MIN_CUBE = 512_000_000
 
 # target hash-agg entries per reducer in _dense_via_groupby; a table much
 # beyond ~2e5 entries lives long enough to hit old-gen GC (sweep numbers
-# in the _dense_via_groupby docstring). Module constant so bench tooling
-# can sweep it.
+# in the _dense_via_groupby docstring)
 GROUPBY_CELLS_PER_REDUCER = 195_000
 
 
@@ -306,17 +284,15 @@ def _flat_idx_expr(
     any axis out of range nulls its index, null propagates through the
     arithmetic, and the caller coalesces to a -1 sentinel — the whole N-D
     bin computation is ONE Project with no filter anywhere before the
-    aggregation (see :func:`bin_index_nullable` for why that matters)."""
+    aggregation (see :func:`bin_index_expr` for why that matters)."""
     flat: Column | None = None
     for ax, sname in zip(axes, source_names):
-        idx = bin_index_nullable(ax, F.col(sname)).cast("long")
+        idx = bin_index_expr(ax, F.col(sname)).cast("long")
         flat = idx if flat is None else flat * F.lit(ax.nbins) + idx
     return flat
 
 
-def _groupby_sparse_agg(
-    proj: DataFrame, cube: int, occupancy_hint: int | None = None,
-) -> DataFrame:
+def _groupby_sparse_agg(proj: DataFrame, cube: int) -> DataFrame:
     """The groupby path's sparse-aggregate plan: ``(__idx, __cnt)``.
 
     Split out of :func:`_dense_via_groupby` so the physical plan is
@@ -331,54 +307,46 @@ def _groupby_sparse_agg(
         default = spark.sparkContext.defaultParallelism
     keyed = proj.select(F.col("__idx").cast(idx_t).alias("__idx"))
     group_cols = ["__idx"]
-    if GROUPBY_CELLS_PER_REDUCER is not None:
-        groups = cube if occupancy_hint is None else min(cube, int(occupancy_hint))
-        want = min(1024, groups // GROUPBY_CELLS_PER_REDUCER)
-        if want > default:
-            # partition by CONTIGUOUS index blocks rather than raw idx
-            # hash: each reducer's output then covers a few contiguous
-            # cube regions, so the driver's scatter below streams through
-            # small windows of the dense array instead of random-storing
-            # across all 400 MB (measured 2.3 s -> 0.85 s on the 1e8-row
-            # 100^4 bench; collect time unchanged). 32 blocks per reducer
-            # keeps the block->reducer hash assignment balanced. The
-            # block id joins the grouping keys, so HashPartitioning on it
-            # still satisfies the aggregate's clustering requirement —
-            # no second exchange (plan-asserted). Peaked data routes away
-            # from this branch via occupancy_hint exactly as before.
-            #
-            # Out-of-range rows (the -1 sentinel) get a SPREAD block id
-            # (round 12, guide §2.5 single-giant-key skew): the bare
-            # repartition has no map-side partial aggregation, so every
-            # sentinel row shuffles, and with blk = idx/span they ALL
-            # hashed to one reducer — on the 1e8-row 4-D momentum
-            # workflow (26.5% out-of-range after the kx/ky/energy/delay
-            # range cuts) that one task fetched 26.5M extra rows while
-            # 511 idled, and the full path measured 11.9 s vs 6.0 s with
-            # the sentinel group spread by map-partition id (driver
-            # scatter drops idx < 0 regardless, so the result is
-            # bit-identical — verified). A pre-shuffle filter instead is
-            # NOT safe: predicate pushdown inlines the whole flat-index
-            # tree below the axis staging and the 4-D workflow measured
-            # 88 s interpreted (see plans/r12/).
-            span = max(1, cube // (32 * want))
-            blk = F.when(
-                F.col("__idx") >= 0,
-                (F.col("__idx") / F.lit(span)).cast("int"),
-            ).otherwise(-(F.spark_partition_id() + 1))
-            keyed = keyed.select(
-                "__idx", blk.alias("__blk"),
-            ).repartition(want, "__blk")
-            group_cols = ["__blk", "__idx"]
+    want = min(1024, cube // GROUPBY_CELLS_PER_REDUCER)
+    if want > default:
+        # partition by CONTIGUOUS index blocks rather than raw idx hash:
+        # each reducer's output then covers a few contiguous cube
+        # regions, so the driver's scatter streams through small windows
+        # of the dense array instead of random-storing across all 400 MB
+        # (measured 2.3 s -> 0.85 s on the 1e8-row 100^4 bench; collect
+        # time unchanged). 32 blocks per reducer keeps the block->reducer
+        # hash assignment balanced. The block id joins the grouping keys,
+        # so HashPartitioning on it still satisfies the aggregate's
+        # clustering requirement — no second exchange (plan-asserted).
+        #
+        # Out-of-range rows (the -1 sentinel) get a SPREAD block id
+        # (single-giant-key skew): the bare repartition has no map-side
+        # partial aggregation, so every sentinel row shuffles, and with
+        # blk = idx/span they ALL hashed to one reducer — on the 1e8-row
+        # 4-D momentum workflow (26.5% out-of-range after the
+        # kx/ky/energy/delay range cuts) that one task fetched 26.5M
+        # extra rows while 511 idled, and the full path measured 11.9 s
+        # vs 6.0 s with the sentinel group spread by map-partition id
+        # (driver scatter drops idx < 0 regardless, so the result is
+        # bit-identical — tests/test_binning.py). A pre-shuffle filter
+        # instead is NOT safe: predicate pushdown inlines the whole
+        # flat-index tree below the axis staging and the 4-D workflow
+        # measured 88 s interpreted (see plans/r12/).
+        span = max(1, cube // (32 * want))
+        blk = F.when(
+            F.col("__idx") >= 0,
+            (F.col("__idx") / F.lit(span)).cast("int"),
+        ).otherwise(-(F.spark_partition_id() + 1))
+        keyed = keyed.select(
+            "__idx", blk.alias("__blk"),
+        ).repartition(want, "__blk")
+        group_cols = ["__blk", "__idx"]
     return keyed.groupBy(*group_cols).agg(
         F.count(F.lit(1)).cast("int").alias("__cnt"),
     ).select("__idx", "__cnt")
 
 
-def _dense_via_groupby(
-    proj: DataFrame, cube: int, occupancy_hint: int | None = None,
-    out_dtype="uint32",
-) -> np.ndarray:
+def _dense_via_groupby(proj: DataFrame, cube: int, out_dtype="uint32") -> np.ndarray:
     """JVM hash aggregate, sparse Arrow collect, flat scatter.
 
     ``toArrow`` Arrow-encodes the aggregated partitions on the executors in
@@ -395,12 +363,11 @@ def _dense_via_groupby(
     12 s) — hence the ~195k-cells-per-reducer target
     (``GROUPBY_CELLS_PER_REDUCER``); past ~8 s the remaining variance
     is this VM's GC/scheduling noise, not plan shape. The count is
-    expressed
-    PER-QUERY as an explicit ``repartition(want, "__idx")`` below the
-    aggregate — no session-conf set/restore, so concurrent queries on
-    the same session are unaffected. ``HashPartitioning(__idx, want)``
-    satisfies the aggregate's clustered-distribution requirement, so
-    EnsureRequirements inserts no second exchange; the trade is that the
+    expressed PER-QUERY as an explicit ``repartition(want, "__blk")``
+    below the aggregate — no session-conf set/restore, so concurrent
+    queries on the same session are unaffected. ``HashPartitioning(__blk,
+    want)`` satisfies the aggregate's clustered-distribution requirement,
+    so EnsureRequirements inserts no second exchange; the trade is that the
     exchange moves raw keys instead of map-side partials, which at the
     occupancies where the override kicks in (> ~25M cells ⇒ near-unique
     keys per map task) is the same volume — measured equal-or-better
@@ -408,20 +375,13 @@ def _dense_via_groupby(
     keep the normal partial→exchange→final plan under the session
     default. AQE may still coalesce by size afterwards.
 
-    Caveat: the default trigger is CUBE size, not actual occupancy. A
-    large cube whose data concentrates in few bins (a sharp peak) would
-    shuffle raw rows onto few reducers here, where the plain plan's
-    map-side combine would have collapsed them first — for such
-    workloads pass ``occupancy_hint`` (an upper bound on the number of
-    occupied cells, e.g. the previous run's group count or the row
-    count): the reducer sizing then uses ``min(cube, hint)``, so a
-    peaked distribution keeps the session-default partial→final plan.
-    No sampling job is spent estimating it — an extra scan per query
-    costs more than the mis-sizing it would prevent at current
-    workloads (measured equal), so the hint is an explicit caller dial,
-    not hidden state. ``GROUPBY_CELLS_PER_REDUCER = None`` disables
-    the repartition entirely."""
-    agg = _groupby_sparse_agg(proj, cube, occupancy_hint)
+    Caveat: the trigger is CUBE size, not actual occupancy. A large cube
+    whose data concentrates in few bins (a sharp peak) shuffles raw rows
+    here, where the plain plan's map-side combine would have collapsed
+    them first. No sampling job is spent estimating occupancy — an extra
+    scan per query costs more than the mis-sizing it would prevent at
+    current workloads (measured equal)."""
+    agg = _groupby_sparse_agg(proj, cube)
     # allocate straight in the caller's output dtype: assigning the
     # sparse (idx, cnt) pairs casts on write — bit-identical to the old
     # uint32-then-astype shape but skips a full read+write pass over the
@@ -433,141 +393,6 @@ def _dense_via_groupby(
         cnt = batch.column(1).to_numpy(zero_copy_only=False)
         ok = idx >= 0  # -1 sentinel group = out-of-range rows
         dense[idx[ok]] = cnt[ok]  # groupBy keys are globally unique
-    return dense
-
-
-def _dense_via_taskblob(
-    proj: DataFrame, cube: int, out_dtype="uint32",
-) -> np.ndarray:
-    """High-occupancy cube: per-task sort-unique → ONE packed blob per task
-    → direct Arrow collect → driver scatter-add. NO shuffle stage at all.
-
-    When occupancy approaches the cube size (rows ≳ cells), the groupby
-    path degrades: map-side partial aggregation stops reducing anything
-    (most groups are near-unique per task), so the full row set shuffles,
-    the final hash aggregate builds a ~cube-sized table, and the sparse
-    collect still transfers ~occupancy × 12 B. Here each task instead
-    reduces its own rows with ``np.unique`` (indices are then unique
-    *within* a task), packs (idx, cnt) as two binary columns in a single
-    record batch, and the driver adds each task's pairs into the dense
-    cube with one vectorized scatter per task — correct because
-    within-task uniqueness means no collisions inside a single scatter.
-    Driver traffic is the summed per-task occupancy (bounded by
-    min(rows, tasks × cube)).
-
-    MEASURED on the 1e8-row 100⁴ bench (local[32]): 21 s vs 13.6 s for
-    the groupby path — the per-task ``np.unique`` sort plus the serial
-    driver scatter over ~98 M pairs costs more than the JVM hash
-    aggregate saves. Kept as a measured alternative and for workloads
-    where driver bandwidth beats shuffle capacity; NOT selected by
-    ``method="auto"``.
-    """
-    import pyarrow as pa
-
-    idx_dtype = np.int32 if cube <= np.iinfo(np.int32).max else np.int64
-    if idx_dtype is np.int32:
-        proj = proj.select(F.col("__idx").cast("int").alias("__idx"))
-
-    def to_pairs(batches):
-        chunks = [b.column(0).to_numpy(zero_copy_only=False) for b in batches]
-        if not chunks:
-            return
-        idx = np.concatenate(chunks) if len(chunks) > 1 else chunks[0]
-        idx = idx[idx >= 0]  # drop the -1 out-of-range sentinel
-        if len(idx) == 0:
-            return
-        nz, cnt = np.unique(idx, return_counts=True)
-        yield pa.RecordBatch.from_arrays(
-            [
-                pa.array([nz.astype(idx_dtype, copy=False).tobytes()],
-                         pa.large_binary()),
-                pa.array([cnt.astype(np.uint32).tobytes()], pa.large_binary()),
-            ],
-            ["iv", "cv"],
-        )
-
-    # taskblob ACCUMULATES (+=) across task blobs, so it must keep the
-    # exact uint32 accumulator the contract documents (a float32 +=
-    # would round per-add past 2^24) and convert ONCE at the end —
-    # unlike the assign-only paths, which cast on write
-    dense = np.zeros(cube, dtype=np.uint32)
-    tbl = proj.select("__idx").mapInArrow(to_pairs, "iv binary, cv binary").toArrow()
-    iv_col, cv_col = tbl.column("iv"), tbl.column("cv")
-    for k in range(len(iv_col)):
-        iv = np.frombuffer(iv_col[k].as_buffer(), dtype=idx_dtype)
-        cv = np.frombuffer(cv_col[k].as_buffer(), dtype=np.uint32)
-        dense[iv] += cv  # iv unique within one task's blob — no collisions
-    return dense if np.dtype(out_dtype) == np.uint32 \
-        else dense.astype(out_dtype)
-
-
-def _dense_via_blockshuffle(
-    proj: DataFrame, cube: int, out_dtype="uint32",
-) -> np.ndarray:
-    """High-occupancy cube: block-partition exchange → per-block dense
-    ``np.bincount`` → driver block assembly. No aggregation stage at all.
-
-    When occupancy approaches the cube size (rows ≳ cells), the groupby
-    path wastes its map-side partial aggregate (near-unique keys per task:
-    the hash table grows to ~rows/tasks entries and reduces almost
-    nothing) and the final aggregate builds ~occupancy-sized hash tables.
-    Here the flat index space [0, cube) is cut into ``P`` contiguous
-    blocks; a plain ``repartition`` on the block id moves raw int32 keys
-    (pure exchange, no agg machinery), and each Python task bincounts its
-    blocks into dense uint32 spans — vectorized, no hash table, no sort.
-    Every row with the same block id lands in exactly one partition, so
-    blocks never collide across tasks and the driver writes each span
-    once. Driver traffic is exactly cube × 4 B regardless of row count,
-    the only plan whose driver cost stays flat as occupancy → 100 %.
-
-    MEASURED on the 1e8-row 100⁴ bench (local[32]): 16.4 s vs 13.6 s for
-    the groupby path — the Arrow transfer of 1e8 raw keys into Python
-    workers costs more than the JVM partial+final aggregate. Kept as a
-    measured alternative; would win where occupancy ≫ what a sparse
-    collect can carry (counts ≫ cells, tiny cube) or where the final
-    hash aggregate spills. NOT selected by ``method="auto"``.
-    """
-    import pyarrow as pa
-
-    nparts = max(proj.sparkSession.sparkContext.defaultParallelism, 1)
-    nblocks = min(4 * nparts, cube)
-    span = -(-cube // nblocks)  # ceil
-
-    inrange = proj.filter(F.col("__idx") >= 0)
-    if cube <= np.iinfo(np.int32).max:
-        inrange = inrange.select(F.col("__idx").cast("int").alias("__idx"))
-    blocked = inrange.repartition(
-        nblocks, (F.col("__idx") / F.lit(span)).cast("int"),
-    )
-
-    def to_blocks(batches):
-        chunks = [b.column(0).to_numpy(zero_copy_only=False) for b in batches]
-        if not chunks:
-            return
-        idx = np.concatenate(chunks) if len(chunks) > 1 else chunks[0]
-        if len(idx) == 0:
-            return
-        blocks = idx // span
-        for b in np.unique(blocks):
-            lo = int(b) * span
-            n = min(span, cube - lo)
-            cnt = np.bincount(idx[blocks == b] - lo, minlength=n)
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array([int(b)], pa.int32()),
-                    pa.array([cnt.astype(np.uint32, copy=False).tobytes()],
-                             pa.large_binary()),
-                ],
-                ["b", "data"],
-            )
-
-    dense = np.zeros(cube, dtype=out_dtype)  # cast-on-write, see groupby
-    tbl = blocked.mapInArrow(to_blocks, "b int, data binary").toArrow()
-    data_col = tbl.column("data")
-    for i, b in enumerate(tbl.column("b").to_pylist()):
-        lo = b * span
-        chunk = np.frombuffer(data_col[i].as_buffer(), dtype=np.uint32)
-        dense[lo:lo + len(chunk)] = chunk
     return dense
 
 
@@ -647,16 +472,10 @@ def _dense_via_chunks(
                 ["ch", "data"],
             )
 
-    import os
-    import time as _time
-
-    debug = bool(os.environ.get("SED_SPARK_BIN_DEBUG"))
     pairs = proj.select("__idx").mapInArrow(to_pairs, "ch int, iv binary, cv binary")
     nred = min(nchunks, 2 * parallelism)
     reduced = pairs.repartition(nred, "ch").mapInArrow(combine, "ch int, data binary")
-    t0 = _time.perf_counter()
     tbl = reduced.toArrow()
-    t1 = _time.perf_counter()
     dense = np.zeros(cube, dtype=out_dtype)  # cast-on-write, see groupby
     data_col = tbl.column("data")
     for i, c in enumerate(tbl.column("ch").to_pylist()):
@@ -665,9 +484,6 @@ def _dense_via_chunks(
         lo = c * span
         n = min(len(chunk), cube - lo)  # defensive trim for the last chunk
         dense[lo:lo + n] = chunk[:n]
-    if debug:
-        print(f"[bin chunked] nchunks={nchunks} span={span} "
-              f"collect={t1 - t0:.2f}s assemble={_time.perf_counter() - t1:.2f}s")
     return dense
 
 
@@ -679,21 +495,14 @@ def bin_dataframe(
     jitter=None,
     jitter_seed: int | None = None,
     dtype: str = "float32",
-    method: str = "auto",
-    occupancy_hint: int | None = None,
 ) -> BinnedData:
     """N-dimensional histogram, densified to a :class:`BinnedData`.
 
     Spark equivalent of the reference's ``bin_dataframe``
     (src/sed/binning/binning.py:200-427). The final cast to float32 follows
-    binning.py:408,421. ``method`` is ``auto`` (cube-size heuristic:
-    groupby below ``CHUNKED_MIN_CUBE`` cells, chunked above), ``groupby``,
-    ``chunked``, ``taskblob``, or ``blockshuffle`` — the last two are
-    measured-slower alternatives kept for their docstring'd tradeoffs.
-    ``occupancy_hint`` bounds the expected number of occupied cells for
-    the groupby path's reducer sizing (see :func:`_dense_via_groupby`) —
-    pass it when the data is known to be sharply peaked relative to the
-    cube.
+    binning.py:408,421. The physical path follows from the cube size alone
+    (module docstring): the JVM hash aggregate with a sparse collect up to
+    ``CHUNKED_MIN_CUBE`` cells, per-chunk dense sub-arrays above it.
     """
     norm = normalize_bins(bins, axes, ranges)
     shape = tuple(ax.nbins for ax in norm)
@@ -706,20 +515,10 @@ def bin_dataframe(
     srcdf, snames = _axis_source_projection(df, norm, jitter, jitter_seed)
     flat = _flat_idx_expr(norm, snames)
     proj = srcdf.select(F.coalesce(flat, F.lit(-1).cast("long")).alias("__idx"))
-    if method == "auto":
-        method = "groupby" if cube <= CHUNKED_MIN_CUBE else "chunked"
-    if method == "groupby":
-        dense = _dense_via_groupby(
-            proj, cube, occupancy_hint=occupancy_hint, out_dtype=dtype,
-        )
-    elif method == "chunked":
-        dense = _dense_via_chunks(proj, cube, out_dtype=dtype)
-    elif method == "taskblob":
-        dense = _dense_via_taskblob(proj, cube, out_dtype=dtype)
-    elif method == "blockshuffle":
-        dense = _dense_via_blockshuffle(proj, cube, out_dtype=dtype)
+    if cube <= CHUNKED_MIN_CUBE:
+        dense = _dense_via_groupby(proj, cube, out_dtype=dtype)
     else:
-        raise ValueError(f"unknown binning method {method!r}")
+        dense = _dense_via_chunks(proj, cube, out_dtype=dtype)
     coords = {ax.name: ax.bin_centers() for ax in norm}
     return BinnedData(
         # builders already produced `dtype`; astype(copy=False) is a no-op

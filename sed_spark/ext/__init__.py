@@ -25,6 +25,8 @@ documented justification.
 from __future__ import annotations
 
 import math
+import struct
+import threading
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -42,20 +44,36 @@ __all__ = ["scale_out", "lit_double_array", "lit_long_array"]
 #: workloads never hit a reconstruction cliff.
 _ARR_CACHE: dict = {}
 _ARR_CACHE_MAX = 4096
+#: one lock for every ``_lru_cached`` dict: the suite builds plans from
+#: thread pools, and an unguarded move-to-end or eviction can delete a key
+#: another thread already removed (KeyError)
+_CACHE_LOCK = threading.Lock()
 
 
 def _lru_cached(cache: dict, cap: int, key, builder):
-    col = cache.get(key)
-    if col is not None:
-        # dicts preserve insertion order; re-inserting = move to MRU end
-        del cache[key]
-        cache[key] = col
-        return col
-    if len(cache) >= cap:
-        cache.pop(next(iter(cache)))  # evict LRU (oldest) entry only
+    with _CACHE_LOCK:
+        col = cache.pop(key, None)
+        if col is not None:
+            # dicts preserve insertion order; re-inserting = move to MRU end
+            cache[key] = col
+            return col
+    # built outside the lock: builders make py4j calls and may themselves
+    # look up nested cached Columns; two threads racing on one key both
+    # build, and the later insert wins
     col = builder()
-    cache[key] = col
+    with _CACHE_LOCK:
+        cache.pop(key, None)
+        while len(cache) >= cap:
+            del cache[next(iter(cache))]  # evict LRU (oldest) entries only
+        cache[key] = col
     return col
+
+
+def _double_key(vals) -> bytes:
+    """Cache key for float values: their IEEE bit patterns, so ``-0.0``
+    and ``0.0`` (equal as floats, different literals) never share an
+    entry."""
+    return b"".join(struct.pack("<d", v) for v in vals)
 
 
 def lit_double_array(values) -> Column:
@@ -71,7 +89,7 @@ def lit_double_array(values) -> Column:
     vals = tuple(float(v) for v in values)
     if not vals:
         return F.lit([]).cast("array<double>")
-    return _lru_cached(_ARR_CACHE, _ARR_CACHE_MAX, ("d", vals),
+    return _lru_cached(_ARR_CACHE, _ARR_CACHE_MAX, ("d", _double_key(vals)),
                        lambda: _build_double_array(vals))
 
 

@@ -14,6 +14,8 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from sed_spark.ext import _double_key, _lru_cached, lit_double_array
+
 __all__ = [
     "dot_expr",
     "norm2_expr",
@@ -83,22 +85,12 @@ def _col_cached(key, builder) -> Column:
     # LRU eviction (round 12; was a wholesale clear()) — a mixed steady-
     # state workload no longer hits a reconstruction-latency cliff when
     # the cache fills
-    from sed_spark.ext import _lru_cached
-
     return _lru_cached(_COL_CACHE, _COL_CACHE_MAX, key, builder)
 
 
 def _expr_cached(sql: str) -> Column:
     """``F.expr`` with the parsed Column memoized on the SQL text."""
     return _col_cached(("sql", sql), lambda: F.expr(sql))
-
-
-def _lit_arr(values) -> Column:
-    """Literal double-array Column, memoized on the float values."""
-    from sed_spark.ext import lit_double_array
-
-    vals = tuple(float(v) for v in values)
-    return _col_cached(("arr", vals), lambda: lit_double_array(vals))
 
 
 def _sum(arr: Column) -> Column:
@@ -149,7 +141,7 @@ def cosine_topk(
             _expanded_cosine_sql(vec_col, query_vec, round_decimals),
         )
     else:
-        q = _lit_arr(query_vec)
+        q = lit_double_array(query_vec)
         sim = cosine_expr(F.col(vec_col), q)
         if round_decimals is not None:
             sim = F.round(sim, round_decimals)
@@ -345,7 +337,7 @@ def hyperplane_lsh_buckets(
     """
     bucket = None
     for i, p in enumerate(planes):
-        arr = _lit_arr(p)
+        arr = lit_double_array(p)
         bit = F.when(dot_expr(F.col(vec_col), arr) >= 0, F.lit(1 << i)).otherwise(
             F.lit(0),
         )
@@ -385,7 +377,7 @@ def lsh_band_buckets(
         for b in range(n_bands):
             bucket = None
             for i, p in enumerate(planes[b * per:(b + 1) * per]):
-                arr = _lit_arr(p)
+                arr = lit_double_array(p)
                 bit = F.when(
                     dot_expr(F.col(vec_col), arr) >= 0, F.lit(1 << i),
                 ).otherwise(F.lit(0))
@@ -396,7 +388,7 @@ def lsh_band_buckets(
 
     key = (
         "lsh_bands", vec_col, n_bands,
-        tuple(tuple(float(v) for v in p) for p in planes),
+        tuple(_double_key(float(v) for v in p) for p in planes),
     )
     entries_arr = _col_cached(key, build_entries)
     return (
@@ -575,14 +567,14 @@ def _centroid_sims_expr(
     if not EXPANDED_SCORING:
         key = (
             "cent_sims", vec_col, round_decimals,
-            tuple(tuple(float(v) for v in c) for c in centroids),
+            tuple(_double_key(float(v) for v in c) for c in centroids),
         )
         return _col_cached(key, lambda: F.array(
             *[
                 F.round(
                     cosine_expr(
                         F.col(vec_col),
-                        _lit_arr(c),
+                        lit_double_array(c),
                     ),
                     round_decimals,
                 )
@@ -912,7 +904,7 @@ def _score_probed(
             _expanded_cosine_sql(vec_col, query_vec, round_decimals),
         )
     else:
-        qarr = _lit_arr(query_vec)
+        qarr = lit_double_array(query_vec)
         sim = F.round(cosine_expr(F.col(vec_col), qarr), round_decimals)
     cond = (
         F.col("bucket") == probes[0] if len(probes) == 1
@@ -1220,8 +1212,8 @@ def pq_topk(
     num = None
     den = None
     for mm in range(len(codebooks)):
-        t_arr = _lit_arr(t_tabs[mm])
-        n_arr = _lit_arr(n_tabs[mm])
+        t_arr = lit_double_array(t_tabs[mm])
+        n_arr = lit_double_array(n_tabs[mm])
         idx = (F.col(f"__code_{mm}") + 1).cast("int")
         tm = F.element_at(t_arr, idx)
         nm = F.element_at(n_arr, idx)
@@ -1392,16 +1384,16 @@ def ivfpq_topk(
     for mi in range(mm_count):
         idx = (F.col(f"__code_{mi}") + 1).cast("int")
         num = num + F.element_at(
-            _lit_arr(t_tabs[mi]), idx,
+            lit_double_array(t_tabs[mi]), idx,
         )
         den = den + F.lit(2.0) * bucket_case({
             b: F.element_at(
-                _lit_arr(m_tabs[b][mi]), idx,
+                lit_double_array(m_tabs[b][mi]), idx,
             )
             for b in probes
         })
         den = den + F.element_at(
-            _lit_arr(n_tabs[mi]), idx,
+            lit_double_array(n_tabs[mi]), idx,
         )
     score = F.round(num / F.sqrt(den), round_decimals)
     return (

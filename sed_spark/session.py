@@ -9,9 +9,45 @@ pushdown. On a real cluster these same settings apply unchanged; only
 
 from __future__ import annotations
 
+import atexit
+import functools
 import os
+import shutil
 
 from pyspark.sql import SparkSession
+
+#: RAM-backed scratch root: one pid-named subdir per process holds its
+#: local-mode shuffle files and its throwaway streaming checkpoints
+_TMPFS_BASE = "/dev/shm/sed-spark-local"
+
+
+@functools.cache
+def _remove_at_exit(path: str) -> None:
+    atexit.register(shutil.rmtree, path, ignore_errors=True)
+
+
+def process_tmpfs_dir() -> str | None:
+    """This process's tmpfs scratch dir, or None without ``/dev/shm``.
+
+    tmpfs garbage IS RAM: a SIGKILLed JVM leaves its shuffle dirs behind
+    (measured 74 GB of orphans starving later JVMs into OOM kills), so
+    the dir is removed at exit and every call sweeps siblings whose
+    creator pid is gone. Everything this process writes to tmpfs lives
+    under the returned dir, so those two rules cover all of it.
+    """
+    if not os.path.isdir("/dev/shm"):
+        return None
+    me = str(os.getpid())
+    mydir = os.path.join(_TMPFS_BASE, me)
+    try:
+        os.makedirs(mydir, exist_ok=True)
+        for d in os.listdir(_TMPFS_BASE):
+            if d != me and d.isdigit() and not os.path.exists(f"/proc/{d}"):
+                shutil.rmtree(os.path.join(_TMPFS_BASE, d), ignore_errors=True)
+    except OSError:
+        return None
+    _remove_at_exit(mydir)
+    return mydir
 
 
 def default_parallelism() -> int:
@@ -94,27 +130,9 @@ def get_spark(
     # (measured 10-106 s for the SAME 1e8-row 100^4 hash-agg). RAM-backed
     # tmpfs removes that variance. Only applied for local[*] masters —
     # a real cluster's local dirs are the cluster's NVMe, configured there.
-    #
-    # tmpfs garbage IS RAM: a SIGKILLed JVM leaves its shuffle dirs behind
-    # (measured 74 GB of orphans starving later JVMs into OOM kills), so
-    # each process gets its own pid-named subdir, removed at exit, and
-    # every session start sweeps siblings whose creator pid is gone.
-    if master.startswith("local") and os.path.isdir("/dev/shm"):
-        import atexit
-        import shutil
-
-        base = "/dev/shm/sed-spark-local"
-        mydir = os.path.join(base, str(os.getpid()))
-        try:
-            os.makedirs(mydir, exist_ok=True)
-            for d in os.listdir(base):
-                if d != str(os.getpid()) and d.isdigit() \
-                        and not os.path.exists(f"/proc/{d}"):
-                    shutil.rmtree(os.path.join(base, d), ignore_errors=True)
-            atexit.register(shutil.rmtree, mydir, ignore_errors=True)
-            conf.setdefault("spark.local.dir", mydir)
-        except OSError:
-            conf.setdefault("spark.local.dir", base)
+    mydir = process_tmpfs_dir() if master.startswith("local") else None
+    if mydir is not None:
+        conf.setdefault("spark.local.dir", mydir)
     if extra_conf:
         conf.update(extra_conf)
         # keep the code-cache flag when the caller also passes driver

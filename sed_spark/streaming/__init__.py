@@ -24,7 +24,6 @@ lets this run indefinitely on a cluster.
 
 from __future__ import annotations
 
-import os
 import shutil
 import tempfile
 from collections.abc import Sequence
@@ -35,6 +34,7 @@ from pyspark.sql.types import StructType
 
 from sed_spark.binning.core import _bin_columns
 from sed_spark.binning.spec import normalize_bins
+from sed_spark.session import process_tmpfs_dir
 
 __all__ = [
     "read_event_stream",
@@ -339,46 +339,31 @@ def streaming_exact_dedup(
     )
 
 
-def _fast_checkpoint_dir() -> str | None:
-    """A tmpfs-backed checkpoint parent for short-lived drains, or None.
-
-    Every micro-batch commits offsets + per-partition state-store deltas
-    as individual file writes/renames under the checkpoint location; for
-    an availableNow drain whose lifetime is seconds, that metadata I/O on
-    a spinning/virtual disk dominates the query. RAM-backed tmpfs removes
-    it (same reasoning as the session's spark.local.dir choice). A real
-    deployment needs a DURABLE checkpoint (the whole point of it is
-    surviving the driver) — this parent is only used for the throwaway
-    checkpoints of drain-and-stop replays, which are deleted on exit.
-    """
-    base = "/dev/shm/sed-spark-local"
-    if not os.path.isdir("/dev/shm"):
-        return None
-    path = os.path.join(base, f"{os.getpid()}-ckpt")
-    try:
-        os.makedirs(path, exist_ok=True)
-    except OSError:
-        return None
-    return path
-
-
 def run_available_now(
     stream: DataFrame, query_name: str, output_mode: str = "complete",
 ) -> None:
     """Drain everything currently in the source into an in-memory sink and
     stop — the batch-equivalence harness used by the tests (a production
     deployment would use a real sink + continuous trigger). ``complete``
-    emits open windows too; use ``append`` to observe watermark eviction."""
+    emits open windows too; use ``append`` to observe watermark eviction.
+
+    The checkpoint goes to the process's tmpfs scratch dir when there is
+    one: every micro-batch commits offsets and per-partition state-store
+    deltas as individual file writes/renames, and for a drain whose
+    lifetime is seconds that metadata I/O on a spinning or virtual disk
+    dominates the query. A real deployment needs a DURABLE checkpoint
+    (the whole point of it is surviving the driver); this one is thrown
+    away when the drain ends."""
     writer = (
         stream.writeStream.format("memory")
         .queryName(query_name)
         .outputMode(output_mode)
         .trigger(availableNow=True)
     )
-    ckpt_parent = _fast_checkpoint_dir()
+    ckpt_parent = process_tmpfs_dir()
     ckpt = None
     if ckpt_parent is not None:
-        ckpt = tempfile.mkdtemp(prefix=f"{query_name}-", dir=ckpt_parent)
+        ckpt = tempfile.mkdtemp(prefix=f"ckpt-{query_name}-", dir=ckpt_parent)
         writer = writer.option("checkpointLocation", ckpt)
     q = writer.start()
     try:

@@ -1213,11 +1213,10 @@ def dwell_norm(spark, sf_dir):
     df = df.withColumn("ts_us", ts_us(df))
     w = Window.partitionBy("user_id").orderBy("event_id")
     dt = F.col("ts_us") - F.lag("ts_us").over(w)
-    idx, valid = bin_index_expr(_DWELL_AX, F.col("value"))
     return (
         df.withColumn("dt_us", dt)
-        .withColumn("bin_value", idx)
-        .filter(valid)
+        .withColumn("bin_value", bin_index_expr(_DWELL_AX, F.col("value")))
+        .filter(F.col("bin_value").isNotNull())
         .groupBy("bin_value")
         .agg(F.sum("dt_us").alias("dwell_us"))
     )

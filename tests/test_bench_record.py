@@ -115,22 +115,42 @@ def test_only_mode_refuses_without_prior_record(tmp_path):
     assert "no BENCH_full.json" in proc.stderr + proc.stdout
 
 
-def test_only_mode_refuses_cross_scale_splice(tmp_path):
+def _splice_into(tmp_path, record: dict, **env_extra):
+    """Run a copy of bench.py in ONLY mode against ``record``."""
     bench_copy = tmp_path / "bench.py"
     bench_copy.write_text(
         open(os.path.join(os.path.dirname(bench.__file__), "bench.py"))
         .read(),
     )
-    (tmp_path / "BENCH_full.json").write_text(
-        json.dumps({"sf": 0.01, "synthetic_rows": 1000, "queries": {}}),
-    )
+    (tmp_path / "BENCH_full.json").write_text(json.dumps(record))
     env = dict(os.environ)
     env["SPARK_GRAFT_BENCH_ONLY"] = "inv_dfield"
     env["SPARK_GRAFT_SF_DIR"] = "/root/testdata/sf0.1"
     env["PYTHONPATH"] = os.path.dirname(bench.__file__)
-    proc = subprocess.run(
+    env.update(env_extra)
+    return subprocess.run(
         [sys.executable, str(bench_copy)],
         env=env, capture_output=True, text=True, timeout=120,
     )
+
+
+def test_only_mode_refuses_cross_scale_splice(tmp_path):
+    proc = _splice_into(
+        tmp_path, {"sf": 0.01, "synthetic_rows": 1000, "queries": {}},
+    )
     assert proc.returncode != 0
     assert "splicing across scales" in proc.stderr + proc.stdout
+
+
+def test_only_mode_refuses_cross_core_splice(tmp_path):
+    # same scale, other core count — and a record without ``cpus`` (taken
+    # before core counts were recorded) is refused the same way
+    for cpus in (8, None):
+        record = {"sf": 0.1, "synthetic_rows": 1000, "queries": {}}
+        if cpus is not None:
+            record["cpus"] = cpus
+        proc = _splice_into(
+            tmp_path, record, SPARK_GRAFT_CPUS="4", SPARK_GRAFT_BENCH_N="1000",
+        )
+        assert proc.returncode != 0
+        assert "splicing across core counts" in proc.stderr + proc.stdout

@@ -79,36 +79,73 @@ def test_exact_last_edge(spark):
     np.testing.assert_allclose(res.data, [0, 1])
 
 
-def test_methods_agree_4d(events_df, events_pdf):
-    """All four physical strategies produce identical cubes."""
+def _force_chunked(monkeypatch):
+    from sed_spark.binning import core
+
+    monkeypatch.setattr(core, "CHUNKED_MIN_CUBE", 0)
+
+
+def test_methods_agree_4d(events_df, events_pdf, monkeypatch):
+    """The groupby and chunked paths produce identical cubes."""
     bins = [12, 12, 12, 12]
     ranges = [(0.0, 2048.0), (0.0, 2048.0), (60_000.0, 120_000.0),
               (2_000.0, 20_000.0)]
     axes = ["X", "Y", "t", "ADC"]
-    a = bin_dataframe(events_df, bins=bins, axes=axes, ranges=ranges,
-                      method="groupby")
+    a = bin_dataframe(events_df, bins=bins, axes=axes, ranges=ranges)
     ref, _ = np.histogramdd(
         events_pdf[axes].to_numpy(), bins=bins, range=shifted_ranges(bins, ranges),
     )
     np.testing.assert_allclose(a.data, ref)
-    for method in ("chunked", "taskblob", "blockshuffle"):
-        b = bin_dataframe(events_df, bins=bins, axes=axes, ranges=ranges,
-                          method=method)
-        np.testing.assert_array_equal(a.data, b.data)
+    _force_chunked(monkeypatch)
+    b = bin_dataframe(events_df, bins=bins, axes=axes, ranges=ranges)
+    np.testing.assert_array_equal(a.data, b.data)
 
 
-def test_chunked_non_divisible_cube(events_df, events_pdf):
+def test_chunked_non_divisible_cube(events_df, monkeypatch):
     """51^3 = 132651 cells -> nchunks=2, span=66326, last chunk is one cell
     short of span: the combine/assembly path must trim, not broadcast-error."""
     bins = [51, 51, 51]
     ranges = [(0.0, 2048.0), (0.0, 2048.0), (60_000.0, 120_000.0)]
     axes = ["X", "Y", "t"]
-    a = bin_dataframe(events_df, bins=bins, axes=axes, ranges=ranges,
-                      method="groupby")
-    for method in ("chunked", "blockshuffle"):
-        b = bin_dataframe(events_df, bins=bins, axes=axes, ranges=ranges,
-                          method=method)
-        np.testing.assert_array_equal(a.data, b.data)
+    a = bin_dataframe(events_df, bins=bins, axes=axes, ranges=ranges)
+    _force_chunked(monkeypatch)
+    b = bin_dataframe(events_df, bins=bins, axes=axes, ranges=ranges)
+    np.testing.assert_array_equal(a.data, b.data)
+
+
+def test_block_partitioned_groupby_matches_numpy(
+    events_df, events_pdf, monkeypatch,
+):
+    """The groupby path's block-repartition branch (taken when the cube
+    needs more reducers than the session's shuffle width) gives the
+    numpy cube bit for bit, out-of-range rows and their spread sentinel
+    block ids included."""
+    from sed_spark.binning import core
+
+    bins = [24, 24, 24]
+    # half of X and Y lies outside the ranges: ~3/4 of the rows take the
+    # -1 sentinel, spread over every map partition's own block id
+    ranges = [(0.0, 1024.0), (512.0, 1536.0), (60_000.0, 120_000.0)]
+    axes = ["X", "Y", "t"]
+    cube = 24 ** 3
+    shuffle = int(events_df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    monkeypatch.setattr(core, "GROUPBY_CELLS_PER_REDUCER", cube // (2 * shuffle))
+    plans = []
+    build = core._groupby_sparse_agg
+
+    def spy(proj, n):
+        agg = build(proj, n)
+        plans.append(agg._jdf.queryExecution().executedPlan().toString())
+        return agg
+
+    monkeypatch.setattr(core, "_groupby_sparse_agg", spy)
+    res = bin_dataframe(events_df, bins=bins, axes=axes, ranges=ranges)
+    assert len(plans) == 1 and "__blk" in plans[0]
+    ref, _ = np.histogramdd(
+        events_pdf[axes].to_numpy(), bins=bins, range=shifted_ranges(bins, ranges),
+    )
+    assert 0 < res.sum() < len(events_pdf)
+    np.testing.assert_array_equal(res.data, ref.astype(np.float32))
 
 
 def test_jitter_binning_total_preserved(events_df):
@@ -135,21 +172,6 @@ def test_normalize_bins_errors():
         normalize_bins(10, axes=["t"])  # no ranges
     with pytest.raises(ValueError):
         normalize_bins([10, 10], axes=["t"], ranges=[(0, 1), (0, 1)])
-
-
-def test_bin_dataframe_occupancy_hint_same_result(spark, events_df):
-    # the hint only resizes the aggregation's reducer count — a sharply
-    # peaked workload can opt out of the cube-sized raw-key shuffle; the
-    # histogram itself must be identical
-    from sed_spark.binning import bin_dataframe
-
-    kw = dict(
-        bins=[40, 40], axes=["X", "Y"],
-        ranges=[(0.0, 2048.0), (0.0, 2048.0)],
-    )
-    base = bin_dataframe(events_df, **kw)
-    hinted = bin_dataframe(events_df, occupancy_hint=100, **kw)
-    assert (base.data == hinted.data).all()
 
 
 # ---------------------------------------------------------------------------

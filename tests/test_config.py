@@ -78,7 +78,7 @@ def test_processor_jitter_aliases(spark):
     assert row["X"] != 1.0 or row["Y"] != 3.0 or row["t"] != 5.0
 
 
-def test_session_sweeps_orphaned_tmpfs_dirs(spark):
+def test_session_sweeps_orphaned_tmpfs_dirs(spark, tmp_path):
     # a pid-named local-dir whose creator is dead must be deleted at the
     # next get_spark (tmpfs garbage is RAM; a SIGKILLed JVM leaves it)
     import os
@@ -97,4 +97,18 @@ def test_session_sweeps_orphaned_tmpfs_dirs(spark):
     # the live process's own dir is present (created by some session in
     # this test process) and untouched
     mine = os.path.join(base, str(os.getpid()))
+    assert os.path.isdir(mine)
+    # a streaming drain checkpoints inside that same dir, so the exit
+    # cleanup covers it: the drain leaves no sibling such as <pid>-ckpt
+    from sed_spark.streaming import run_available_now
+
+    src = str(tmp_path / "src")
+    spark.range(3).write.parquet(src)
+    run_available_now(
+        spark.readStream.schema("id long").parquet(src), "tmpfs_ckpt_sink",
+        output_mode="append",
+    )
+    assert spark.table("tmpfs_ckpt_sink").count() == 3
+    assert [d for d in os.listdir(base)
+            if d.startswith(str(os.getpid())) and d != str(os.getpid())] == []
     assert os.path.isdir(mine)

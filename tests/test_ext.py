@@ -2115,3 +2115,57 @@ def test_shared_words_and_bigrams_row_identical(spark):
     assert key(text.collocations(corpus, min_count=2).collect()) == key(
         text.collocations(corpus, min_count=2, words=wx, grams=g2).collect(),
     )
+
+
+def test_literal_cache_survives_concurrent_hits_and_evictions():
+    # 8 threads hammer one key of a full cache while a second key keeps
+    # evicting it; the dict yields the GIL after every lookup, so each
+    # move-to-end and eviction races another thread's
+    import threading
+    import time
+
+    from sed_spark.ext import _lru_cached
+
+    class YieldingDict(dict):
+        def get(self, *a):
+            v = super().get(*a)
+            time.sleep(0)
+            return v
+
+        def pop(self, *a):
+            v = super().pop(*a)
+            time.sleep(0)
+            return v
+
+    cache = YieldingDict()
+    errors: list = []
+    start = threading.Barrier(8)
+
+    def hammer(i):
+        start.wait()
+        try:
+            for n in range(400):
+                key = "hot" if (n + i) % 4 else "cold"
+                assert _lru_cached(cache, 1, key, lambda: key) == key
+        except Exception as exc:  # noqa: BLE001 - collected for the assert
+            errors.append(exc)
+
+    threads = [threading.Thread(target=hammer, args=(i,)) for i in range(8)]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join()
+    assert errors == []
+    assert len(cache) == 1
+
+
+def test_lit_double_array_keeps_negative_zero(spark):
+    import math
+
+    from sed_spark.ext import lit_double_array
+
+    lit_double_array([0.0])
+    (v,) = spark.range(1).select(
+        lit_double_array([-0.0])[0].alias("v"),
+    ).first()
+    assert v == 0.0 and math.copysign(1.0, v) == -1.0
